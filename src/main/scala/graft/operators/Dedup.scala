@@ -84,7 +84,7 @@ object Dedup {
   }
 
   /** Word-shingle table `(idCol, sh)` — the exact-verify input. Widened
-    * to the package so the scale harness (BenchSf10's recall audit) can
+    * to the package so the scale harness (ScaleProbe's recall audit) can
     * run the exact pass with the SAME shingle definition the LSH path
     * verifies with — a recall number against a different tokenization
     * would audit nothing.
@@ -224,7 +224,7 @@ object Dedup {
     * Returns one THUNK per slice (construction deferred, not just
     * execution): the caller MUST build+materialize them one at a time —
     * each `mk()` inside its own [[Caches.scoped]] block, releasing
-    * shuffle files between (see BenchSf10's dedup_incr phase) — or the
+    * shuffle files between (see ScaleProbe's dedup_incr phase) — or the
     * scratch bound is lost. Deferral matters because the slice's
     * internal candidate cache registers at CONSTRUCTION time: built
     * eagerly up front, all slices' caches would accumulate globally

@@ -804,17 +804,16 @@ object TextOps {
     *    repeated windows (the hot set — tiny next to the corpus; most
     *    windows are unique and never survive `minDocs`), and only then
     *    rank-capped with [[TopK.perKey]] before collect_list. The order
-    *    matters twice over: a boilerplate window in every doc never
-    *    materializes a corpus-sized list on a reducer, AND TopK's
-    *    per-partition key map only ever holds repeated windows —
-    *    running TopK on the raw pairs would grow that map with every
-    *    distinct window in the partition (TopK's documented
-    *    moderate-key-cardinality contract).
+    *    means a boilerplate window in every doc never materializes a
+    *    corpus-sized list on a reducer.
     *
-    * The pair table is persisted for the two passes (counts + examples)
-    * and not unpersisted — the plan is still lazy at return; long-lived
-    * sessions batching many corpora should `spark.catalog.clearCache()`
-    * between runs (the [[graft.operators.Dedup.minhashLsh]] contract).
+    * NOT lazy: the call itself runs two jobs — it materializes the
+    * persisted pair table and the hot-window counts, whose row count is
+    * the broadcast guard below — so a caller that only composes the plan
+    * still pays both. The pair table and counts stay persisted for the
+    * examples pass and are not unpersisted; long-lived sessions batching
+    * many corpora should `spark.catalog.clearCache()` between runs (the
+    * [[graft.operators.Dedup.minhashLsh]] contract).
     */
   def repeatedWindows(df: DataFrame, idCol: String, textCol: String,
                       w: Int = 7, minDocs: Int = 2,

@@ -34,6 +34,11 @@ object TopK {
   /** Global top-k rows per key with a 1-based rank column `rankCol`
     * assigned in `orderCols` order (ties must be broken by `orderCols`
     * for a deterministic result).
+    *
+    * Assumes Spark ≥ 3.5, where `WindowGroupLimit` exists: on an older
+    * Spark the threshold conf is absent, its '1000' default passes the
+    * check below, and the result is still correct but the pushdown never
+    * fires — every scored row hash-partitions by key.
     */
   def perKey(df: DataFrame, keyCols: Seq[String], orderCols: Seq[Column], k: Int,
              rankCol: String = "rnk"): DataFrame = {

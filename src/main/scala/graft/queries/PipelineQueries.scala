@@ -189,7 +189,7 @@ object PipelineQueries {
     // — the two shapes compute the identical pair set by construction,
     // and the shared oracle proves it cross-engine. (The union here is
     // for the correctness gate; a scale run materializes slice by slice
-    // — see BenchSf10's dedup_incr phase.)
+    // — see ScaleProbe's dedup_incr phase.)
     QueryDef("q_dedup_sliced", minhashPairsOracle) { (s, dir) =>
       graft.sources.Warehouse.resetTable(s, "graft_sliced_bands")
       graft.operators.Dedup.minhashLshSliced(docs(s, dir), "doc_id", "text",

@@ -173,7 +173,7 @@ object GenData {
     val sfStr = sys.env.getOrElse("SPARK_GRAFT_GEN_SF", "10")
     val sf = sfStr.toDouble
     // default dir uses the RAW env string ("data/sf10", not "data/sf10.0")
-    // so GenData and BenchSf10 defaults agree
+    // so GenData and ScaleProbe defaults agree
     val dir = sys.env.getOrElse("SPARK_GRAFT_GEN_DIR", s"data/sf$sfStr")
     val spark = graft.GraftSession.get("graft-gen")
     val t0 = System.nanoTime()

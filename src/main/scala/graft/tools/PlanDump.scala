@@ -3,11 +3,18 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.{GraftSession, SparkEntry}
-import org.apache.spark.sql.execution.SimpleMode
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, SimpleMode}
 
 /** Dumps physical plans of headline queries to PLANS.md — the artifact
   * backing the scale-design claims (pushdown, broadcast, TakeOrdered,
   * narrow pipelines). Regenerate: `sbt "runMain graft.tools.PlanDump"`.
+  *
+  * `PlanDump --tag <round> <suffix> <query>...` instead writes each
+  * named query's `.explain("formatted")` to
+  * `plans/<round>/<query>_<suffix>.txt` — before/after plan evidence for
+  * an optimization pass. Data dir: env SPARK_GRAFT_SF_DIR (default the
+  * PLANS.md dir).
   */
 object PlanDump {
   private val headline = Seq(
@@ -76,6 +83,29 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get("plandump", 8)
     val dir = "/root/testdata/sf0.001"
+    if (args.headOption.contains("--tag")) dumpTagged(spark,
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", dir), args(1), args(2), args.drop(3).toSeq)
+    else dumpHeadline(spark, dir)
+    spark.stop()
+  }
+
+  private def dumpTagged(spark: SparkSession, sfDir: String, round: String,
+                         suffix: String, names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(s"plans/$round"))
+    names.foreach { name =>
+      val path = s"plans/$round/${name}_$suffix.txt"
+      try {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        Files.writeString(Paths.get(path), df.queryExecution.explainString(FormattedMode))
+        println(s"PLANDUMP wrote $path")
+      } catch {
+        case e: Throwable => System.err.println(s"PLANDUMP $name failed: $e")
+      }
+      graft.operators.Caches.unpersistAll()
+    }
+  }
+
+  private def dumpHeadline(spark: SparkSession, dir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — headline physical plans (sf0.001, local[8])\n\n")
     sb.append("Generated by `graft.tools.PlanDump`; the properties asserted in\n")
@@ -89,6 +119,5 @@ object PlanDump {
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
-    spark.stop()
   }
 }

@@ -1,75 +1,60 @@
 package graft.tools
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.collection.mutable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import scala.util.control.NonFatal
+
+import graft.{GraftSession, Json, WorkStats}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
-import org.apache.spark.sql.execution.QueryExecution
 
 /** Scale run: executes the headline engine paths at a generated sfN
   * (default sf10 = 100× the sf0.1 bench rows) and records EVIDENCE that
   * the 100 TB design claims hold when actually run, not just
-  * plan-asserted:
+  * plan-asserted. Every selected phase runs against the base dir and
+  * then the target dir, so time-vs-rows scaling is measured inside one
+  * harness, and each phase records (from [[graft.WorkStats]]):
   *
-  *   - wall time per query/phase, at the base sf AND the target sf, so
-  *     time-vs-rows scaling is measured inside one harness;
-  *   - per-stage task-input balance from a task-metrics listener
-  *     (max task input bytes, worst max/median ratio over stages with
-  *     meaningful input) — the "no task 10× the median" skew check;
+  *   - wall time, tasks, stages, failed tasks;
+  *   - per-stage task-input balance: max task input bytes and the worst
+  *     max/median ratio over stages with meaningful input — the "no task
+  *     10× the median" skew check;
   *   - AQE skew-split activations (final executed plans swept for
   *     `skew=true`) and peak task execution memory — the no-OOM check.
   *
-  * Phases: (a) all 22 TPC-H queries, (b) the dedup battery
-  * (minhashLsh → dropNearDuplicates → duplicateClusters), (c) the
-  * IVF-PQ ANN read path (trained coarse cells + PQ codebook, nprobe
-  * pruning, broadcast-LUT ADC scoring, TopK.perKey merge).
+  * Phases (env `SPARK_GRAFT_PHASES`, comma list; default all but
+  * ingest, clusters, bands and scratch): tpch (the 22 TPC-H queries),
+  * dedup (minhashLsh → dropNearDuplicates → duplicateClusters),
+  * dedup_incr (saved band index + sequential slices), dedup_recall (LSH
+  * vs exact ground truth), stream, ingest (the streaming corpus door),
+  * spans, bpe, pipeline, ann (on-disk IVF-PQ), clusters (label
+  * propagation on a 20M-vertex graph), bands (the derived band-index
+  * bucket count + the first slices against it), scratch (peak
+  * `spark.local.dir` bytes of the heaviest TPC-H shuffles).
+  *
+  * Env: SPARK_GRAFT_SF_DIR (target, default data/sf10),
+  * SPARK_GRAFT_BASE_DIR (default data/sf0.1), SPARK_GRAFT_OUT (default
+  * BENCH_SF10.json), SPARK_GRAFT_SCRATCH (the session's
+  * `spark.local.dir`, default `<java.io.tmpdir>/graft_scratch`),
+  * SPARK_GRAFT_INGEST_FILES / SPARK_GRAFT_INGEST_MAXFILES (ingest
+  * micro-batch sizing), SPARK_GRAFT_SHUFFLE (see GraftSession).
   */
-object BenchSf10 {
+object ScaleProbe {
 
-  /** Per-stage task input sizes + global peaks, by listener. */
-  final class TaskStats extends SparkListener {
-    val byStage = mutable.Map[Int, mutable.ArrayBuffer[Long]]()
-    @volatile var peakExecMem = 0L
-    @volatile var failedTasks = 0
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-      if (e.reason.toString != "Success") failedTasks += 1
-      val m = e.taskMetrics
-      if (m != null) {
-        val in = m.inputMetrics.bytesRead +
-          m.shuffleReadMetrics.remoteBytesRead + m.shuffleReadMetrics.localBytesRead
-        byStage.getOrElseUpdate(e.stageId, mutable.ArrayBuffer[Long]()) += in
-        if (m.peakExecutionMemory > peakExecMem) peakExecMem = m.peakExecutionMemory
-      }
-    }
-    /** (maxTaskInput, worstMaxOverMedian) over stages with median > 1 MB. */
-    def skewSummary(): (Long, Double, Int, Int) = synchronized {
-      val maxIn = byStage.values.flatten.foldLeft(0L)(math.max)
-      var worst = 0.0
-      for (tasks <- byStage.values if tasks.length >= 4) {
-        val s = tasks.sorted
-        val med = s(s.length / 2)
-        if (med > (1L << 20)) worst = math.max(worst, s.last.toDouble / med)
-      }
-      (maxIn, math.round(worst * 100) / 100.0, byStage.size, byStage.values.map(_.size).sum)
-    }
-    def reset(): Unit = synchronized { byStage.clear(); peakExecMem = 0L; failedTasks = 0 }
-  }
+  private val phases: Set[String] =
+    sys.env.getOrElse("SPARK_GRAFT_PHASES",
+        "tpch,dedup,dedup_incr,dedup_recall,stream,spans,bpe,pipeline,ann")
+      .split(",").map(_.trim).filter(_.nonEmpty).toSet
 
-  /** Counts AQE skew-split activations in final executed plans. */
-  final class SkewCounter extends QueryExecutionListener {
-    @volatile var skewSplits = 0
-    override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
-      val p = qe.executedPlan.toString
-      skewSplits += "skew=true".r.findAllIn(p).size
-    }
-    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    /** Per-phase attribution: snapshot-and-zero between phases. */
-    def reset(): Int = { val n = skewSplits; skewSplits = 0; n }
-  }
+  /** The heaviest TPC-H shuffle shapes (q5 is also the slowest sf100
+    * TPC-H query), characterized by the scratch phase.
+    */
+  private val scratchQueries = Seq("q_tpch_q5", "q_tpch_q9", "q_tpch_q18", "q_tpch_q21")
 
-  private def resetTable(spark: SparkSession, table: String): Unit =
-    graft.sources.Warehouse.resetTable(spark, table)
+  /** Incremental slices the bands phase runs (of 8). */
+  private val bandSlices = 2
 
   private def time[A](body: => A): (Double, A) = {
     val t0 = System.nanoTime()
@@ -77,17 +62,6 @@ object BenchSf10 {
     ((System.nanoTime() - t0) / 1e9, r)
   }
   private def r3(d: Double): Double = math.round(d * 1000) / 1000.0
-
-  /** Which sweep sections run — env `SPARK_GRAFT_PHASES` (comma list of
-    * tpch,dedup,spans,bpe,pipeline,ann; default all). Lets an sf100-scale run
-    * skip the training-dominated ANN phase (already measured at sf10 —
-    * its cost is kmeans+PQ training, which the frozen-codebook
-    * streaming design amortizes anyway) without forking the tool.
-    */
-  private val phases: Set[String] =
-    sys.env.getOrElse("SPARK_GRAFT_PHASES",
-        "tpch,dedup,dedup_incr,dedup_recall,stream,spans,bpe,pipeline,ann")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
 
   /** Release the PREVIOUS query's shuffle files. Spark's ContextCleaner
     * deletes a shuffle's disk blocks only after its Dataset is
@@ -113,50 +87,127 @@ object BenchSf10 {
     */
   @volatile private var sawFatal = false
   private def noteFailure(e: Throwable): Unit =
-    if (!scala.util.control.NonFatal(e)) sawFatal = true
+    if (!NonFatal(e)) sawFatal = true
 
-  /** A phase that dies (ENOSPC on a single query's shuffle peak, OOM)
-    * is reported and skipped; the sweep still publishes an artifact
-    * with every phase that DID complete.
-    */
-  private def phaseFailed(phase: String, e: Throwable): Unit = {
-    System.err.println(s"[sf10] phase $phase FAILED: ${e.getMessage}")
-    noteFailure(e)
-    // a failed phase must not pin its persisted frames for the rest of
-    // the sweep (it likely failed UNDER memory/disk pressure)
-    graft.operators.Caches.unpersistAll()
-    reclaimShuffle()
+  private def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
+    f.delete(); ()
   }
 
-  /** One full phase sweep against `dir`; returns (name -> seconds).
-    * A failed query records -1 and the sweep continues — a scale
-    * artifact with one honest hole beats no artifact.
+  /** On-disk bytes under `root`. Files vanish mid-walk as shuffles
+    * release, and the walk iterator then throws UncheckedIOException (a
+    * RuntimeException, NOT IOException — an IOException-only catch let
+    * the sampler thread DIE mid-probe and a later query read peak=0), so
+    * every level catches NonFatal.
     */
-  private def sweep(spark: SparkSession, dir: String): Seq[(String, Double)] = {
-    import graft.operators.{Dedup, TopK, Vectors}
+  private def treeBytes(root: Path): Long = {
+    var total = 0L
+    try {
+      val s = Files.walk(root)
+      try {
+        val it = s.iterator()
+        var more = true
+        while (more) {
+          more = try it.hasNext catch { case NonFatal(_) => false }
+          if (more) {
+            val f = it.next()
+            total += (try if (Files.isRegularFile(f)) Files.size(f) else 0L
+              catch { case NonFatal(_) => 0L })
+          }
+        }
+      } finally s.close()
+    } catch { case NonFatal(_) => }
+    total
+  }
+
+  /** Samples the scratch tree once a second, keeping the HIGH-WATER
+    * mark: a query that dies with ENOSPC still reports, because the last
+    * peak IS the measurement (the disk line the host imposes).
+    */
+  private final class Sampler(root: Path) extends Thread {
+    val peak = new AtomicLong
+    @volatile private var stopped = false
+    setDaemon(true)
+    def shutdown(): Unit = stopped = true
+    override def run(): Unit =
+      while (!stopped) {
+        peak.accumulateAndGet(treeBytes(root), (a, b) => math.max(a, b))
+        Thread.sleep(1000)
+      }
+  }
+
+  /** One sweep of the selected phases against `dir`; returns its JSON. */
+  private def sweep(spark: SparkSession, stats: WorkStats, dir: String): String = {
+    import graft.operators.{Caches, Dedup, Vectors}
+    // name -> seconds (or a count); a failed query records -1 and the
+    // sweep continues — a scale artifact with one honest hole beats none
     val out = mutable.ArrayBuffer[(String, Double)]()
-    if (phases("tpch")) for (i <- 1 to 22) {
-      val name = s"q_tpch_q$i"
+    val phaseJson = mutable.LinkedHashMap.empty[String, String]
+    def sparkDrain(): Unit = org.apache.spark.GraftListenerDrain.drain(spark.sparkContext)
+
+    /** Runs one selected phase under its own stats window. A phase that
+      * dies (ENOSPC on a single query's shuffle peak, OOM) is reported
+      * and skipped; the sweep still publishes every phase that DID
+      * complete. `body` returns the phase's JSON note.
+      */
+    def phase(name: String)(body: => String): Unit = if (phases(name)) {
+      sparkDrain()
+      stats.reset()
+      val t0 = System.nanoTime()
+      val note =
+        try body
+        catch {
+          case e: Throwable => // incl. OutOfMemoryError: artifact > purity
+            System.err.println(s"[scale] $dir phase $name FAILED: ${e.getMessage}")
+            noteFailure(e)
+            Json.quote(s"FAILED: ${e.getMessage}")
+        }
+      val secs = r3((System.nanoTime() - t0) / 1e9)
+      // deterministic: every task-end and query-end event of the phase
+      // has been delivered before the window is read
+      sparkDrain()
+      val s = stats.snapshot()
+      val (maxIn, worst, stages, tasks) = stats.skewSummary()
+      phaseJson(name) =
+        s"""{"sec":$secs,"tasks":$tasks,"stages":$stages,""" +
+          s""""failed_tasks":${s.failedTasks},"peak_task_exec_mem_bytes":${s.peakMem},""" +
+          s""""max_task_input_bytes":$maxIn,"worst_task_over_median":$worst,""" +
+          s""""aqe_skew_splits":${s.skewSplits},"note":$note}"""
+      System.err.println(s"[scale] $dir $name -> ${phaseJson(name)}")
+      // a phase must not pin its persisted frames for the rest of the
+      // sweep (a failed one likely failed UNDER memory/disk pressure)
+      Caches.unpersistAll()
+      reclaimShuffle()
+    }
+
+    def runQuery(name: String): Double =
       try {
         val (secs, _) = time {
           graft.SparkEntry.queries(name)(spark, dir)
             .write.format("noop").mode("overwrite").save()
         }
-        out += name -> r3(secs)
+        r3(secs)
       } catch {
-        case e: Throwable => // incl. OutOfMemoryError: artifact > purity
-          System.err.println(s"[sf10] $name FAILED: ${e.getMessage}")
+        case e: Throwable =>
+          System.err.println(s"[scale] $name FAILED: ${e.getMessage}")
           noteFailure(e)
-          out += name -> -1.0
+          -1.0
       }
-      reclaimShuffle()
+
+    val t0 = System.nanoTime()
+    phase("tpch") {
+      for (i <- 1 to 22) {
+        val name = s"q_tpch_q$i"
+        out += name -> runQuery(name)
+        reclaimShuffle()
+      }
+      "null"
     }
     // lazy: schema resolution reads the parquet footer eagerly, and a
     // phase-restricted sweep must not require tables its phases never use
     lazy val docs = graft.sources.Tables(spark, dir, "documents")
-    if (phases("dedup")) try {
-      val pairs = graft.operators.Caches.track(
-        Dedup.minhashLsh(docs, "doc_id", "text"))
+    phase("dedup") {
+      val pairs = Caches.track(Dedup.minhashLsh(docs, "doc_id", "text"))
       val (tPairs, nPairs) = time(pairs.count())
       out += "dedup_minhash_pairs" -> r3(tPairs)
       val (tDrop, nKept) = time(
@@ -165,27 +216,22 @@ object BenchSf10 {
       val (tClust, nClust) = time(
         Dedup.duplicateClusters(pairs.select("a_id", "b_id")).count())
       out += "dedup_clusters" -> r3(tClust)
-      graft.operators.Caches.unpersistAll()
-      reclaimShuffle()
-      println(s"[sf10] $dir dedup: pairs=$nPairs kept=$nKept clustered=$nClust")
-    } catch { case e: Throwable => phaseFailed("dedup", e) }
+      s"""{"pairs":$nPairs,"kept":$nKept,"clustered":$nClust}"""
+    }
 
     // full-corpus dedup through the INCREMENTAL path: saveBandTable once,
     // then sequential slice-vs-corpus passes (Dedup.minhashLshSliced).
     // This is the shape that completes at sf100 on one node — the
-    // one-shot self-join's single-job shuffle peak exceeds this VM's
+    // one-shot self-join's single-job shuffle peak exceeds one node's
     // scratch at 1000× rows — and the shape a 1000-executor ingest
     // pipeline runs anyway. Each slice materializes separately, with
     // caches + shuffle files released between slices, so peak scratch
     // is ~1/slices of the one-shot.
-    if (phases("dedup_incr")) try {
-      resetTable(spark, "bench_band_index")
-      val sliceFrames = {
-        val (tBuild, fs) = time(Dedup.minhashLshSliced(
-          docs, "doc_id", "text", table = "bench_band_index", slices = 8))
-        out += "dedup_incr_index_build" -> r3(tBuild)
-        fs
-      }
+    phase("dedup_incr") {
+      graft.sources.Warehouse.resetTable(spark, "bench_band_index")
+      val (tBuild, sliceFrames) = time(Dedup.minhashLshSliced(
+        docs, "doc_id", "text", table = "bench_band_index", slices = 8))
+      out += "dedup_incr_index_build" -> r3(tBuild)
       var nPairsIncr = 0L
       val (tSlices, _) = time {
         sliceFrames.zipWithIndex.foreach { case (mkSlice, i) =>
@@ -193,14 +239,14 @@ object BenchSf10 {
           // registers at construction time, so building here routes it
           // to this scope and it is released before the next slice —
           // the whole point of the bounded-scratch shape
-          graft.operators.Caches.scoped { nPairsIncr += mkSlice().count() }
+          Caches.scoped { nPairsIncr += mkSlice().count() }
           reclaimShuffle()
-          println(s"[sf10] $dir dedup_incr slice $i done (pairs so far: $nPairsIncr)")
+          println(s"[scale] $dir dedup_incr slice $i done (pairs so far: $nPairsIncr)")
         }
       }
       out += "dedup_incr_slices" -> r3(tSlices)
-      println(s"[sf10] $dir dedup_incr: pairs=$nPairsIncr")
-    } catch { case e: Throwable => phaseFailed("dedup_incr", e) }
+      s"""{"pairs":$nPairsIncr}"""
+    }
 
     // LSH recall audited against EXACT ground truth at scale — the
     // q_dedup_eval check (150 docs at sf0.1) re-run where it matters.
@@ -211,7 +257,7 @@ object BenchSf10 {
     // scored against that window (pairs outside it are reported
     // separately, not counted against recall — across-window hits are
     // true near-dups the window oracle simply cannot see).
-    if (phases("dedup_recall")) try {
+    phase("dedup_recall") {
       val win = 51
       val slices = 8
       // Scratch-bounded at ANY sf (the one-shot exploded-pair shuffle
@@ -222,7 +268,7 @@ object BenchSf10 {
       // the production minhashLshSliced path — every pass materializes
       // to parquet with caches + shuffle reclaimed between, so peak
       // scratch is ~1/slices of the one-shot on BOTH sides.
-      val tmp = java.nio.file.Files.createTempDirectory("graft_recall").toString
+      val tmp = Files.createTempDirectory("graft_recall").toString
       val (tRecall, metrics) = try {
         time {
           Dedup.shingleTable(docs, "doc_id", "text")
@@ -230,7 +276,7 @@ object BenchSf10 {
             .write.mode("overwrite").parquet(s"$tmp/sh")
           val sh = spark.read.parquet(s"$tmp/sh")
           for (s <- 0 until slices) {
-            graft.operators.Caches.scoped {
+            Caches.scoped {
               // window candidates as an equi-join: explode the offsets
               // on the slim id side, join back per side — never a
               // theta/nested-loop join
@@ -246,11 +292,11 @@ object BenchSf10 {
             }
             reclaimShuffle()
           }
-          resetTable(spark, "recall_band_index")
+          graft.sources.Warehouse.resetTable(spark, "recall_band_index")
           Dedup.minhashLshSliced(docs, "doc_id", "text",
               table = "recall_band_index", slices = slices)
             .zipWithIndex.foreach { case (mk, i) =>
-              graft.operators.Caches.scoped {
+              Caches.scoped {
                 mk().select("a_id", "b_id")
                   .write.mode("overwrite").parquet(s"$tmp/lsh_$i")
               }
@@ -264,13 +310,7 @@ object BenchSf10 {
           val nMissed = tp.join(lsh, Seq("a_id", "b_id"), "left_anti").count()
           (nTrue, nLshInWin, nLshOutWin, nMissed)
         }
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-          f.delete(); ()
-        }
-        rm(new java.io.File(tmp))
-      }
+      } finally rmTree(new java.io.File(tmp))
       val (nTrue, nLshInWin, nLshOutWin, nMissed) = metrics
       val recallPpm =
         if (nTrue > 0) (1000000L * (nTrue - nMissed)) / nTrue else -1L
@@ -279,68 +319,53 @@ object BenchSf10 {
       out += "dedup_recall_missed" -> nMissed.toDouble
       out += "dedup_recall_ppm" -> recallPpm.toDouble
       // pairs the window oracle cannot see; when this dwarfs
-      // true_pairs the dir was NOT generated by tools/GenData (the
-      // driver's testdata plants sparse far-apart dups) and the ppm
+      // true_pairs the dir was NOT generated by tools/GenData (other
+      // testdata plants sparse far-apart dups) and the ppm
       // above audits only the in-window slice
       out += "dedup_recall_lsh_outside_window" -> nLshOutWin.toDouble
-      graft.operators.Caches.unpersistAll()
-      reclaimShuffle()
-      println(s"[sf10] $dir dedup_recall: true=$nTrue lsh_in_win=$nLshInWin " +
-        s"lsh_out_win=$nLshOutWin missed=$nMissed recall_ppm=$recallPpm")
-    } catch { case e: Throwable => phaseFailed("dedup_recall", e) }
+      s"""{"lsh_in_window":$nLshInWin}"""
+    }
 
     // round-8 operators at scale: exact maximal dup spans (the planted
     // ~10% document duplicates give every sf real span work) and the
     // dictionary-encoded BPE token counting
-    if (phases("spans")) try {
+    phase("spans") {
       val (tSpans, nSpans) = time(
         graft.operators.TextOps.duplicateSpans(docs, "doc_id", "text",
           k = 6, minTokens = 8).count())
       out += "text_dup_spans" -> r3(tSpans)
-      graft.operators.Caches.unpersistAll()
-      reclaimShuffle()
-      println(s"[sf10] $dir spans=$nSpans")
-    } catch { case e: Throwable => phaseFailed("spans", e) }
+      s"""{"spans":$nSpans}"""
+    }
     // streaming throughput at scale: the events table replayed THROUGH
     // the Structured Streaming engine (file source in bounded micro-
     // batches, state store, checkpoint) — windowed aggregation and
     // watermark dedup, the two stateful shapes every ingest pipeline
     // runs. Evidence the streaming path scales, not just that its
     // semantics hold (StreamingSpec).
-    if (phases("stream")) try {
+    phase("stream") {
       import org.apache.spark.sql.streaming.Trigger
       // the streaming file source requires a DIRECTORY; the testdata
       // ships events as a single parquet file — hardlink it into a temp
-      // dir (fall back to copy across filesystems)
-      val eventsFile = java.nio.file.Paths.get(s"$dir/events.parquet")
-      // temp dirs (events hardlink copy + one checkpoint per stream) are
-      // deleted as soon as each stream finishes — repeated sweeps on this
-      // scratch-constrained VM must not accumulate parquet copies and
-      // state-store files in /tmp
-      def rmTree(p: java.nio.file.Path): Unit = {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-          f.delete(); ()
-        }
-        rm(p.toFile)
-      }
-      val linkedEventsDir: Option[java.nio.file.Path] =
-        if (java.nio.file.Files.isDirectory(eventsFile)) None
+      // dir (fall back to copy across filesystems). Temp dirs are
+      // deleted as soon as each stream finishes, so repeated sweeps on a
+      // scratch-constrained host do not accumulate parquet copies and
+      // state-store files.
+      val eventsFile = Paths.get(s"$dir/events.parquet")
+      val linkedEventsDir: Option[Path] =
+        if (Files.isDirectory(eventsFile)) None
         else {
-          val d = java.nio.file.Files.createTempDirectory("graft-bench-events")
+          val d = Files.createTempDirectory("graft-bench-events")
           val tgt = d.resolve("events.parquet")
-          try java.nio.file.Files.createLink(tgt, eventsFile)
-          catch { case _: Exception =>
-            java.nio.file.Files.copy(eventsFile, tgt); () }
+          try Files.createLink(tgt, eventsFile)
+          catch { case _: Exception => Files.copy(eventsFile, tgt); () }
           Some(d)
         }
+      val events = mutable.ArrayBuffer[String]()
       try {
         val eventsPath = linkedEventsDir.map(_.toString).getOrElse(eventsFile.toString)
         val schema = spark.read.parquet(eventsPath).schema
-        def runStream(name: String,
-                      graph: DataFrame => DataFrame): Unit = {
-          val ckpt = java.nio.file.Files
-            .createTempDirectory(s"graft-bench-$name")
+        def runStream(name: String, graph: DataFrame => DataFrame): Unit = {
+          val ckpt = Files.createTempDirectory(s"graft-bench-$name")
           try {
             var rows = 0L
             val (t, _) = time {
@@ -357,17 +382,17 @@ object BenchSf10 {
               rows = q.recentProgress.map(_.numInputRows).sum
             }
             out += s"stream_$name" -> r3(t)
-            println(s"[sf10] $dir stream_$name: events=$rows " +
-              s"eps=${if (t > 0) math.round(rows / t) else 0}")
+            events += s""""${name}_events":$rows,"${name}_eps":${if (t > 0) math.round(rows / t) else 0}"""
             reclaimShuffle()
-          } finally rmTree(ckpt)
+          } finally rmTree(ckpt.toFile)
         }
         runStream("windowed_counts",
           src => graft.streaming.EventPipeline.windowedCounts(src))
         runStream("dedup",
           src => graft.streaming.EventPipeline.dedupStream(src, Seq("event_id")))
-      } finally linkedEventsDir.foreach(rmTree)
-    } catch { case e: Throwable => phaseFailed("stream", e) }
+      } finally linkedEventsDir.foreach(d => rmTree(d.toFile))
+      events.mkString("{", ",", "}")
+    }
 
     // the WHOLE streaming ingest door at scale: 90% of the documents
     // table is the frozen corpus (band index + dup-gram table + a tiny
@@ -377,21 +402,20 @@ object BenchSf10 {
     // gate, quota, decontamination — in micro-batches through the real
     // Structured Streaming engine. The docs/sec figure is the number a
     // production door is sized by.
-    if (phases("ingest")) try {
-      import org.apache.spark.sql.streaming.Trigger
+    phase("ingest") {
       val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
       val streamDocs = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      resetTable(spark, "ingest_bands")
-      resetTable(spark, "ingest_grams")
+      graft.sources.Warehouse.resetTable(spark, "ingest_bands")
+      graft.sources.Warehouse.resetTable(spark, "ingest_grams")
       val (tIdx, _) = time {
-        graft.operators.Dedup.saveBandTable(corpus, "doc_id", "text", "ingest_bands")
+        Dedup.saveBandTable(corpus, "doc_id", "text", "ingest_bands")
         graft.operators.TextOps.saveDupGramTable(corpus, "doc_id", "text",
           "ingest_grams", k = 6)
       }
       out += "ingest_index_build" -> r3(tIdx)
       val bench = corpus.filter(pmod(col("doc_id"), lit(997)) === 1)
         .select("doc_id", "text")
-      val root = java.nio.file.Files.createTempDirectory("graft_ingest")
+      val root = Files.createTempDirectory("graft_ingest")
       try {
         val (srcDir, sink, state, ckpt) = (s"$root/src", s"$root/sink", s"$root/state", s"$root/ckpt")
         // micro-batch sizing: a batch's working set (all six gates in
@@ -423,32 +447,22 @@ object BenchSf10 {
         out += "ingest_stream" -> r3(tIngest)
         out += "ingest_docs_per_sec" ->
           (if (tIngest > 0) math.round(nStream / tIngest).toDouble else -1.0)
-        println(s"[sf10] $dir ingest: docs=$nStream kept=$kept " +
-          s"sec=${r3(tIngest)} dps=${math.round(nStream / math.max(0.001, tIngest))}")
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-          f.delete(); ()
-        }
-        rm(root.toFile)
-      }
-      graft.operators.Caches.unpersistAll()
-      reclaimShuffle()
-    } catch { case e: Throwable => phaseFailed("ingest", e) }
+        s"""{"docs":$nStream,"kept":$kept}"""
+      } finally rmTree(root.toFile)
+    }
 
-    if (phases("bpe")) try {
+    phase("bpe") {
       val (tBpe, nBpe) = time(
         graft.operators.Bpe.bpeTokenCounts(docs, "doc_id", "text").count())
       out += "bpe_token_counts" -> r3(tBpe)
-      reclaimShuffle()
-      println(s"[sf10] $dir bpe_docs=$nBpe")
-    } catch { case e: Throwable => phaseFailed("bpe", e) }
+      s"""{"docs":$nBpe}"""
+    }
 
     // end-to-end corpus prep: Gopher quality gate (narrow signals joined
     // back on id) → exact dedup → token chunking — the standard
     // pre-training front half, timed as ONE pipeline so the phase cost
     // includes the joins a real run pays, not just each operator alone
-    if (phases("pipeline")) try {
+    phase("pipeline") {
       val (tPipe, nChunks) = time {
         val sig = graft.operators.TextOps.gopherSignals(docs, "doc_id", "text")
           .filter(col("dup_5gram_frac") < 0.5 && col("alpha_frac") >= 0.5)
@@ -459,9 +473,8 @@ object BenchSf10 {
           size = 64, overlap = 8).count()
       }
       out += "pipeline_prep" -> r3(tPipe)
-      reclaimShuffle()
-      println(s"[sf10] $dir pipeline chunks=$nChunks")
-    } catch { case e: Throwable => phaseFailed("pipeline", e) }
+      s"""{"chunks":$nChunks}"""
+    }
 
     // IVF-PQ via the ON-DISK index: the production read path. Training
     // (kmeans cells + PQ codebook over a deterministic sample), index
@@ -470,20 +483,19 @@ object BenchSf10 {
     // amortization argument ("training is paid once, searches are
     // cheap") is a measured number here, not a claim.
     lazy val emb = graft.sources.Tables(spark, dir, "embeddings")
-    if (phases("ann")) try {
+    phase("ann") {
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val sample = emb.filter(pmod(col("vec_id"), lit(37)) === 0)
-      val (tTrain, cbPair) = time {
-        val c = graft.operators.Caches.track(
+      val (tTrain, (cells, codebook)) = time {
+        val c = Caches.track(
           Vectors.kmeans(sample, "vec_id", "embedding", k = 16, iters = 2)
             .centroids.select("cid", "ce"), lvl)
-        val cb = graft.operators.Caches.track(
+        val cb = Caches.track(
           Vectors.pqTrain(sample, "vec_id", "embedding", m = 4, k = 16,
             iters = 2), lvl)
         c.count(); cb.count()
         (c, cb)
       }
-      val (cells, codebook) = cbPair
       out += "ann_train" -> r3(tTrain)
       val idxPath = s"${sys.props("java.io.tmpdir")}/graft_annidx_" +
         new java.io.File(dir).getName
@@ -500,53 +512,109 @@ object BenchSf10 {
           k = 10, nprobe = 4, m = 4, dims = 64).count()
       }
       out += "ann_index_search" -> r3(tSearch)
-      graft.operators.Caches.unpersistAll()
-      println(s"[sf10] $dir ann: train=${r3(tTrain)} build=${r3(tBuild)} " +
-        s"search=${r3(tSearch)} rows=$nAnn")
-    } catch { case e: Throwable => phaseFailed("ann", e) }
-    out.toSeq
+      s"""{"rows":$nAnn}"""
+    }
+
+    // cached-plan AQE on an ITERATIVE operator: Dedup.duplicateClusters
+    // (the entity-resolve / components kernel) on a 20M-vertex graph
+    // from orders — the shape q_components declares at mod 60, at a
+    // scale where every propagation round's persisted label frame is
+    // GBs, not KBs
+    phase("clusters") {
+      val edges = graft.sources.Tables(spark, dir, "orders")
+        .selectExpr("o_custkey % 20000000 AS src",
+          "(o_custkey + o_orderkey) % 20000000 AS dst")
+      val pairs = graft.operators.Graph.canonicalEdges(edges)
+        .selectExpr("a AS a_id", "b AS b_id")
+      val clusters = Dedup.duplicateClusters(pairs)
+      val (tClust, n) = time(clusters.count())
+      out += "clusters_label_propagation" -> r3(tClust)
+      val distinct = clusters.agg(count_distinct(col("cluster"))).head().getLong(0)
+      s"""{"vertices":$n,"clusters":$distinct}"""
+    }
+
+    // Dedup.adaptiveBuckets — the derived band-index bucket count: its
+    // inputs and output, the index build, and the first slices against it
+    phase("bands") {
+      val derived = Dedup.adaptiveBuckets(docs)
+      val estBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
+      graft.sources.Warehouse.resetTable(spark, "probe_band_idx")
+      val (tBuild, _) = time(
+        Dedup.saveBandTable(docs, "doc_id", "text", "probe_band_idx"))
+      out += "bands_index_build" -> r3(tBuild)
+      graft.sources.Warehouse.resetTable(spark, "probe_band_slices")
+      var pairs = 0L
+      val (tSlices, _) = time {
+        Dedup.minhashLshSliced(docs, "doc_id", "text",
+            table = "probe_band_slices", slices = 8)
+          .take(bandSlices).foreach { mk =>
+            Caches.scoped { pairs += mk().count() }
+            reclaimShuffle()
+          }
+      }
+      out += s"bands_slices_first$bandSlices" -> r3(tSlices)
+      s"""{"derived_buckets":$derived,"corpus_size_estimate_bytes":$estBytes,""" +
+        s""""slices_run":$bandSlices,"pairs":$pairs}"""
+    }
+
+    // scratch-disk characterization: peak spark.local.dir bytes per
+    // heavy TPC-H query, and bytes per lineitem row — turning "exceeds
+    // this node's disk" into the per-executor provisioning number a
+    // 1000-executor deployment sizes against (each executor shuffles
+    // rows/E, so local disk ≈ bytes_per_row × rows ÷ E × safety factor)
+    phase("scratch") {
+      val root = Paths.get(spark.sparkContext.getConf.get("spark.local.dir"))
+      val liRows = spark.read.parquet(s"$dir/lineitem.parquet").count()
+      val sampler = new Sampler(root)
+      sampler.start()
+      try scratchQueries.map { name =>
+        // release the PREVIOUS query's shuffle files before measuring
+        // this one: ContextCleaner unlinks on GC, but one gc+2s was not
+        // always enough — an r14 run recorded q9 at q5's leftover
+        // high-water mark. GC until the live tree drains (60 s cap),
+        // then zero the high-water mark.
+        var settle = 0
+        while (settle < 30 && treeBytes(root) > (64L << 20)) {
+          System.gc(); Thread.sleep(2000); settle += 1
+        }
+        sampler.peak.set(0L)
+        val secs = runQuery(name)
+        out += s"scratch_$name" -> secs
+        val peak = sampler.peak.get
+        val bytesPerRow = math.round(peak.toDouble / math.max(1L, liRows) * 1000) / 1000.0
+        s""""$name":{"status":"${if (secs < 0) "failed" else "ok"}",""" +
+          s""""peak_scratch_bytes":$peak,"bytes_per_lineitem_row":$bytesPerRow}"""
+      }.mkString(s"""{"lineitem_rows":$liRows,"queries":{""", ",", "}}")
+      finally sampler.shutdown()
+    }
+
+    val wall = r3((System.nanoTime() - t0) / 1e9)
+    val qs = out.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    val ps = phaseJson.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    s"""{"dir":${Json.quote(dir)},"wall_sec":$wall,"degraded_after_failure":$sawFatal,""" +
+      s""""queries":$qs,"phases":$ps}"""
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "data/sf10")
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_BASE_DIR", "/root/testdata/sf0.1")
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_SF10_OUT", "BENCH_SF10.json")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "data/sf10")
+    val baseDir = sys.env.getOrElse("SPARK_GRAFT_BASE_DIR", "data/sf0.1")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT", "BENCH_SF10.json")
+    val scratch = sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
+      s"${sys.props("java.io.tmpdir")}/graft_scratch")
+    Files.createDirectories(Paths.get(scratch))
     // Both scale knobs (reduce parallelism from the TARGET dir's size,
     // periodic cleaner GC) are DERIVED in GraftSession.scaleBuilder —
     // r8 and r10 each had to rediscover them as run-specific flags;
     // now a scale run cannot forget them.
-    val spark = {
-      val s = graft.GraftSession.scaleBuilder("graft-sf10", Seq(sfDir))
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    val stats = new TaskStats
-    val skews = new SkewCounter
-    spark.sparkContext.addSparkListener(stats)
-    spark.listenerManager.register(skews)
+    val spark = GraftSession.scaleBuilder("graft-scale", Seq(sfDir))
+      .config("spark.local.dir", scratch)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val stats = WorkStats.register(spark)
     spark.range(1000).selectExpr("sum(id)").collect() // JVM/codegen warmup
 
-    def phase(dir: String): String = {
-      stats.reset()
-      skews.reset() // drop warmup / previous-phase attributions
-      val t0 = System.nanoTime()
-      val times = sweep(spark, dir)
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener queue drains asynchronously; give it a beat before reading
-      Thread.sleep(2000)
-      val (maxIn, worstRatio, stages, tasks) = stats.skewSummary()
-      val qs = times.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-      s"""{"dir":"$dir","wall_sec":${r3(wall)},"queries":$qs,""" +
-        s""""max_task_input_bytes":$maxIn,"worst_task_over_median":$worstRatio,""" +
-        s""""stages":$stages,"tasks":$tasks,"failed_tasks":${stats.failedTasks},""" +
-        s""""peak_task_exec_mem_bytes":${stats.peakExecMem},""" +
-        s""""degraded_after_failure":$sawFatal,""" +
-        s""""aqe_skew_splits":${skews.reset()}}"""
-    }
-
     // measured, not assumed: the artifact's scale ratio comes from the
-    // actual lineitem row counts of the two (env-overridable) dirs
+    // actual lineitem row counts of the two dirs
     def liRows(dir: String): Long =
       spark.read.parquet(s"$dir/lineitem.parquet").count()
     val (baseRows, targetRows) = (liRows(baseDir), liRows(sfDir))
@@ -558,15 +626,16 @@ object BenchSf10 {
     val knobSource =
       if (sys.env.contains("SPARK_GRAFT_SHUFFLE")) "env_override" else "derived_from_input_bytes"
 
-    val baseJson = phase(baseDir)
-    val sfJson = phase(sfDir)
+    val baseJson = sweep(spark, stats, baseDir)
+    val sfJson = sweep(spark, stats, sfDir)
     val json =
-      s"""{"metric":"sf10_scale_run","unit":"sec","rows_ratio":$ratio,""" +
+      s"""{"metric":"scale_probe","unit":"sec","rows_ratio":$ratio,""" +
         s""""base_lineitem_rows":$baseRows,"target_lineitem_rows":$targetRows,""" +
         s""""shuffle_partitions":$shufflePartitions,"shuffle_partitions_source":"$knobSource",""" +
+        s""""scratch_dir":${Json.quote(scratch)},""" +
         s""""completed":true,"base":$baseJson,"target":$sfJson}"""
     println(json)
-    val w = new java.io.PrintWriter(outPath)
+    val w = new java.io.PrintWriter(outPath, "UTF-8")
     try w.println(json) finally w.close()
     spark.stop()
   }
